@@ -1,8 +1,10 @@
 """Scalar S2 cell geometry (face/level/uv-bounds, vertices, bounds).
 
-Used driver-side by the region coverer; the distributed hot paths never
-materialize Cell objects (they recompute what they need from cell_id in
-vectorized kernels).  Conforms to /root/reference/S2Geometry/S2Cell.cs.
+Used driver-side for regions without a batched ``relate_cells``; the
+coverer's polygon path and the distributed hot paths never materialize
+Cell objects (they recompute what they need from cell ids in vectorized
+kernels: cells_uv_bounds and the helpers below).  Conforms to the
+reference's S2Cell.cs.
 """
 
 from __future__ import annotations
@@ -198,53 +200,47 @@ class Cell:
         return a1 + a2
 
 
+def cells_uv_bounds(ids: np.ndarray):
+    """Decode once: (face, (u_lo, u_hi, v_lo, v_hi)) per cell id, the
+    batched S2Cell (u,v) bounds (S2Cell.cs:460-483)."""
+    ids = np.asarray(ids, dtype=np.uint64)
+    face, i, j = ci.to_face_ij_orientation(ids)
+    size = np.int64(1) << (ci.MAX_LEVEL - ci.level_of(ids))
+    ij_lo_i = (i & -size) * 2 - MAX_CELL_SIZE
+    ij_lo_j = (j & -size) * 2 - MAX_CELL_SIZE
+    sij = np.stack((ij_lo_i, ij_lo_i + size * 2, ij_lo_j, ij_lo_j + size * 2))
+    return face, tuple(ci.st_to_uv(sij / MAX_CELL_SIZE))
+
+
+def uv_bounds_vertices(face, uv) -> np.ndarray:
+    """(n, 4, 3) normalized corners SW, SE, NE, NW of cells_uv_bounds."""
+    u_lo, u_hi, v_lo, v_hi = uv
+    u = np.stack((u_lo, u_hi, u_hi, u_lo), axis=-1)
+    v = np.stack((v_lo, v_lo, v_hi, v_hi), axis=-1)
+    x, y, z = ci.face_uv_to_xyz(face[:, None], u, v)
+    n = np.sqrt(x * x + y * y + z * z)
+    return np.stack((x / n, y / n, z / n), axis=-1)
+
+
+def uv_bounds_contain_point(face, uv, px: float, py: float, pz: float) -> np.ndarray:
+    """S2Cell.Contains(point) over cells_uv_bounds (S2Cell.cs:444-456)."""
+    u_lo, u_hi, v_lo, v_hi = uv
+    comp = np.array([px, py, pz])[face % 3]
+    right_side = np.where(face < 3, comp > 0, comp < 0)
+    u, v = ci.valid_face_xyz_to_uv(face, np.float64(px), np.float64(py), np.float64(pz))
+    return right_side & (u >= u_lo) & (u <= u_hi) & (v >= v_lo) & (v <= v_hi)
+
+
 def cells_vertices(ids: np.ndarray) -> np.ndarray:
     """Vectorized cell corners: (n, 4, 3) normalized vertices in CCW order
     SW, SE, NE, NW (S2Cell.GetVertex batched)."""
-    ids = np.asarray(ids, dtype=np.uint64)
-    face, i, j = ci.to_face_ij_orientation(ids)
-    level = ci.level_of(ids)
-    size = np.int64(1) << (ci.MAX_LEVEL - level)
-    out = np.empty((len(ids), 4, 3), dtype=np.float64)
-    ij_lo_i = (i & -size) * 2 - MAX_CELL_SIZE
-    ij_lo_j = (j & -size) * 2 - MAX_CELL_SIZE
-    u_lo = _st_to_uv_vec(ij_lo_i / MAX_CELL_SIZE)
-    u_hi = _st_to_uv_vec((ij_lo_i + size * 2) / MAX_CELL_SIZE)
-    v_lo = _st_to_uv_vec(ij_lo_j / MAX_CELL_SIZE)
-    v_hi = _st_to_uv_vec((ij_lo_j + size * 2) / MAX_CELL_SIZE)
-    corners = ((u_lo, v_lo), (u_hi, v_lo), (u_hi, v_hi), (u_lo, v_hi))
-    for k, (u, v) in enumerate(corners):
-        x, y, z = ci.face_uv_to_xyz(face, u, v)
-        n = np.sqrt(x * x + y * y + z * z)
-        out[:, k, 0] = x / n
-        out[:, k, 1] = y / n
-        out[:, k, 2] = z / n
-    return out
-
-
-def _st_to_uv_vec(s: np.ndarray) -> np.ndarray:
-    return np.where(s >= 0, (1 / 3.0) * ((1 + s) * (1 + s) - 1),
-                    (1 / 3.0) * (1 - (1 - s) * (1 - s)))
+    return uv_bounds_vertices(*cells_uv_bounds(ids))
 
 
 def cells_contain_point(ids: np.ndarray, px: float, py: float, pz: float) -> np.ndarray:
     """Vectorized S2Cell.Contains(point) over cell-id array (uv-bound test,
     S2Cell.cs:444-456)."""
-    ids = np.asarray(ids, dtype=np.uint64)
-    face, i, j = ci.to_face_ij_orientation(ids)
-    level = ci.level_of(ids)
-    size = np.int64(1) << (ci.MAX_LEVEL - level)
-    comp = np.choose(face % 3, [px, py, pz])
-    right_side = np.where(face < 3, comp > 0, comp < 0)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        u, v = ci.valid_face_xyz_to_uv(face, np.float64(px), np.float64(py), np.float64(pz))
-    ij_lo_i = (i & -size) * 2 - MAX_CELL_SIZE
-    ij_lo_j = (j & -size) * 2 - MAX_CELL_SIZE
-    u_lo = _st_to_uv_vec(ij_lo_i / MAX_CELL_SIZE)
-    u_hi = _st_to_uv_vec((ij_lo_i + size * 2) / MAX_CELL_SIZE)
-    v_lo = _st_to_uv_vec(ij_lo_j / MAX_CELL_SIZE)
-    v_hi = _st_to_uv_vec((ij_lo_j + size * 2) / MAX_CELL_SIZE)
-    return right_side & (u >= u_lo) & (u <= u_hi) & (v >= v_lo) & (v <= v_hi)
+    return uv_bounds_contain_point(*cells_uv_bounds(ids), px, py, pz)
 
 
 def _get_u_norm(face: int, u: float) -> tuple[float, float, float]:

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .hilbert import INVERT_MASK, LOOKUP_IJ, LOOKUP_POS, SWAP_MASK
+from .hilbert import INVERT_MASK, LOOKUP_IJ, LOOKUP_POS8, SWAP_MASK
 
 MAX_LEVEL = 30
 NUM_FACES = 6
@@ -33,6 +33,20 @@ MAX_SIZE = 1 << MAX_LEVEL  # 2**30
 _U = np.uint64
 _BIAS = _U(1) << _U(63)
 _ONE = _U(1)
+
+# Points per block of the encode chain: its float and int temporaries
+# (64k x 8 bytes each) stay in cache instead of streaming through memory.
+ENCODE_BLOCK = 1 << 16
+
+# Per-face component indices into (x, y, z, -x, -y, -z): (u numerator,
+# v numerator, denominator) of valid_face_xyz_to_uv.  Face bits 6 and 7
+# (invalid ids) read as face 5.
+_FACE_UV = np.array([(1, 2, 0), (3, 2, 1), (3, 4, 2), (2, 1, 0), (2, 3, 1),
+                     (4, 3, 2), (4, 3, 2), (4, 3, 2)])
+# Per-face component indices into (1, u, v, -1, -u, -v): (x, y, z) of
+# face_uv_to_xyz.
+_FACE_XYZ = np.array([(0, 1, 2), (4, 0, 2), (4, 5, 0), (3, 5, 4), (2, 3, 4),
+                      (2, 1, 3), (2, 1, 3), (2, 1, 3)])
 
 
 # ---------------------------------------------------------------------------
@@ -76,10 +90,11 @@ def st_to_uv(s):
 
 
 def uv_to_st(u):
-    """Inverse quadratic projection. S2Projections.cs:257-265."""
+    """Inverse quadratic projection. S2Projections.cs:257-265.  One sqrt:
+    1 - 3u == 1 + 3|u| exactly for u < 0."""
     u = np.asarray(u, dtype=np.float64)
-    with np.errstate(invalid="ignore"):
-        return np.where(u >= 0, np.sqrt(1 + 3 * u) - 1, 1 - np.sqrt(1 - 3 * u))
+    r = np.sqrt(1 + 3 * np.abs(u))
+    return np.where(u >= 0, r - 1, 1 - r)
 
 
 def xyz_to_face(x, y, z):
@@ -90,34 +105,35 @@ def xyz_to_face(x, y, z):
     return np.where(comp < 0, face + 3, face)
 
 
+def _per_face(table, face, a, b, c):
+    """Elementwise (a, b, c, -a, -b, -c)[table[face, k]] for each column k
+    of table, for broadcast inputs: one gather per ENCODE_BLOCK instead of
+    a select per face."""
+    face, a, b, c = np.broadcast_arrays(face, a, b, c)
+    shape = face.shape
+    face, a, b, c = (v.reshape(-1) for v in (face, a, b, c))
+    out = np.empty((table.shape[1], len(face)))
+    for s in range(0, len(face), ENCODE_BLOCK):
+        e = s + ENCODE_BLOCK
+        f = face[s:e]
+        comps = np.concatenate((a[s:e], b[s:e], c[s:e]))
+        comps = np.concatenate((comps, -comps))
+        out[:, s:e] = comps[table[f] * len(f) + np.arange(len(f))[:, None]].T
+    return [col.reshape(shape) for col in out]
+
+
 def valid_face_xyz_to_uv(face, x, y, z):
     """(face,xyz) -> (u,v), assumes p on the +face side. S2Projections.cs:296-329."""
+    un, vn, d = _per_face(_FACE_UV, face, np.asarray(x, dtype=np.float64),
+                          np.asarray(y, dtype=np.float64), np.asarray(z, dtype=np.float64))
     with np.errstate(divide="ignore", invalid="ignore"):
-        u = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4],
-            [y / x, -x / y, -x / z, z / x, z / y],
-            default=-y / z,
-        )
-        v = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4],
-            [z / x, z / y, -y / z, y / x, -x / y],
-            default=-x / z,
-        )
-    return u, v
+        return un / d, vn / d
 
 
 def face_uv_to_xyz(face, u, v):
     """(face,u,v) -> direction vector (not unit length). S2Projections.cs:277-294."""
-    u = np.asarray(u, dtype=np.float64)
-    v = np.asarray(v, dtype=np.float64)
-    one = np.ones_like(u)
-    x = np.select([face == 0, face == 1, face == 2, face == 3, face == 4],
-                  [one, -u, -u, -one, v], default=v)
-    y = np.select([face == 0, face == 1, face == 2, face == 3, face == 4],
-                  [u, one, -v, -v, -one], default=u)
-    z = np.select([face == 0, face == 1, face == 2, face == 3, face == 4],
-                  [v, v, one, -u, -u], default=-one)
-    return x, y, z
+    return tuple(_per_face(_FACE_XYZ, face, np.float64(1.0), np.asarray(u, dtype=np.float64),
+                           np.asarray(v, dtype=np.float64)))
 
 
 def st_to_ij(s):
@@ -133,17 +149,18 @@ def st_to_ij(s):
 
 
 def from_face_ij(face, i, j):
-    """Leaf cell id from (face, i, j). 8 rounds of 4-bit LUT gathers."""
+    """Leaf cell id from (face, i, j): 4 rounds of 8-bit gathers from
+    LOOKUP_POS8, in int32.  Bits 0..31 of i and j are read, and each
+    gather equals two rounds of the 4-bit LOOKUP_POS."""
     face = np.asarray(face, dtype=np.int64)
-    i = np.asarray(i, dtype=np.int64)
-    j = np.asarray(j, dtype=np.int64)
+    i = np.asarray(i, dtype=np.int64).astype(np.int32)
+    j = np.asarray(j, dtype=np.int64).astype(np.int32)
     n = face.astype(np.uint64) << _U(POS_BITS - 1)
-    bits = face & SWAP_MASK
-    for k in range(7, -1, -1):
-        bits = bits + (((i >> (k * 4)) & 15) << 6)
-        bits = bits + (((j >> (k * 4)) & 15) << 2)
-        bits = LOOKUP_POS[bits]
-        n = n | ((bits >> 2).astype(np.uint64) << _U(k * 8))
+    bits = (face & SWAP_MASK).astype(np.int32)
+    for k in range(3, -1, -1):
+        bits = bits | (((i >> (k * 8)) & 255) << 10) | (((j >> (k * 8)) & 255) << 2)
+        bits = LOOKUP_POS8[bits]
+        n = n | ((bits >> 2).astype(np.uint64) << _U(k * 16))
         bits = bits & (SWAP_MASK | INVERT_MASK)
     return n * _U(2) + _ONE
 
@@ -171,17 +188,38 @@ def to_face_ij_orientation(ids, want_orientation: bool = False):
     return face, i, j, orientation
 
 
-def from_point(x, y, z):
-    """Leaf cell containing direction vector (x,y,z). S2CellId.cs:412-419."""
+def _in_blocks(encode, *coords):
+    """encode(*coords) over ENCODE_BLOCK-point slices of the broadcast
+    inputs (elementwise, so the result equals one whole-array call)."""
+    coords = np.broadcast_arrays(*(np.asarray(c, dtype=np.float64) for c in coords))
+    if coords[0].size <= ENCODE_BLOCK:
+        return encode(*coords)
+    flat = [c.ravel() for c in coords]
+    out = np.empty(coords[0].shape, dtype=np.uint64)
+    out_flat = out.reshape(-1)
+    for s in range(0, len(out_flat), ENCODE_BLOCK):
+        out_flat[s:s + ENCODE_BLOCK] = encode(*(c[s:s + ENCODE_BLOCK] for c in flat))
+    return out
+
+
+def _encode_point(x, y, z):
     face = xyz_to_face(x, y, z)
     u, v = valid_face_xyz_to_uv(face, x, y, z)
     return from_face_ij(face, st_to_ij(uv_to_st(u)), st_to_ij(uv_to_st(v)))
 
 
+def _encode_latlng(lat_deg, lng_deg):
+    return _encode_point(*xyz_from_latlng_deg(lat_deg, lng_deg))
+
+
+def from_point(x, y, z):
+    """Leaf cell containing direction vector (x,y,z). S2CellId.cs:412-419."""
+    return _in_blocks(_encode_point, x, y, z)
+
+
 def from_latlng_deg(lat_deg, lng_deg):
     """Leaf cell for (lat,lng) in degrees. S2CellId.cs:424-427."""
-    x, y, z = xyz_from_latlng_deg(lat_deg, lng_deg)
-    return from_point(x, y, z)
+    return _in_blocks(_encode_latlng, lat_deg, lng_deg)
 
 
 def to_point_raw(ids):

@@ -1,9 +1,11 @@
 """Hilbert-curve lookup tables for S2 cell-id encoding.
 
 The S2 curve maps (face, i, j) cell coordinates to a position along a
-space-filling curve.  Encoding consumes 4 bits of i and 4 bits of j per
-round through a 1024-entry table ("iiiijjjjoo" -> "ppppppppoo"); decoding
-uses the inverted table.  Semantics follow the public S2 geometry spec
+space-filling curve.  The source table consumes 4 bits of i and 4 bits of
+j per round through 1024 entries ("iiiijjjjoo" -> "ppppppppoo"); decoding
+uses the inverted table.  The numpy encode composes the source table with
+itself into 2^18 entries that consume 8 bits of i and j per round.
+Semantics follow the public S2 geometry spec
 (reference: /root/reference/S2Geometry/S2CellId.cs:76-82,1109-1132 and
 /root/reference/S2Geometry/S2.cs:47-95) but are rebuilt here from the
 published traversal tables, vectorized for numpy.
@@ -66,3 +68,21 @@ def _build_tables() -> tuple[np.ndarray, np.ndarray]:
 
 
 LOOKUP_POS, LOOKUP_IJ = _build_tables()
+
+
+def _compose_pos8(lookup_pos: np.ndarray) -> np.ndarray:
+    """8-bit encode table: "iiiiiiiijjjjjjjjoo" -> "ppppppppppppppppoo".
+
+    Entry k is two LOOKUP_POS rounds, high nibbles of i and j first, the
+    second round starting from the first round's orientation.  Built in
+    int32 (2^18 entries, values below 2^18)."""
+    lut = lookup_pos.astype(np.int32)
+    k = np.arange(1 << 18, dtype=np.int32)
+    hi = lut[(((k >> 14) & 15) << 6) | (((k >> 6) & 15) << 2) | (k & 3)]
+    lo = lut[(((k >> 10) & 15) << 6) | (((k >> 2) & 15) << 2) | (hi & 3)]
+    table = ((hi >> 2) << 10) | lo
+    table.setflags(write=False)
+    return table
+
+
+LOOKUP_POS8 = _compose_pos8(LOOKUP_POS)

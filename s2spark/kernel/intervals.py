@@ -15,6 +15,10 @@ from dataclasses import dataclass
 import numpy as np
 
 PI = math.pi
+# LatLngRect.contains_points latitude screen: slack in sin(lat) units, and
+# points per block (its temporaries stay in cache)
+_SCREEN_MARGIN = 1e-9
+_SCREEN_BLOCK = 1 << 14
 
 
 @dataclass(frozen=True)
@@ -502,7 +506,38 @@ class LatLngRect:
 
     def contains_points(self, x, y, z) -> np.ndarray:
         """Vectorized point containment over xyz arrays (the hot-path
-        bbox pre-filter, S2LatLngRect.cs:772-775)."""
+        bbox pre-filter, S2LatLngRect.cs:772-775).
+
+        Unless the latitude range is full, a latitude screen without
+        trigonometry runs first, over cache-sized blocks: points of norm
+        in (1/2, 2) whose z / |p| lies clearly outside [sin(lo), sin(hi)]
+        are rejected, and the exact atan2 test runs on the rest only.  The
+        screen's 1e-9 margin is far above the rounding of either test, so
+        it never rejects a point the exact test accepts."""
+        x, y, z = np.broadcast_arrays(np.asarray(x, dtype=np.float64),
+                                      np.asarray(y, dtype=np.float64),
+                                      np.asarray(z, dtype=np.float64))
+        if self.lat.lo <= -PI / 2 and self.lat.hi >= PI / 2:
+            return self._contains_exact(x, y, z)
+        shape = x.shape
+        x, y, z = x.ravel(), y.ravel(), z.ravel()
+        result = np.zeros(len(x), dtype=bool)
+        z_lo = math.sin(self.lat.lo) - _SCREEN_MARGIN
+        z_hi = math.sin(self.lat.hi) + _SCREEN_MARGIN
+        for s in range(0, len(x), _SCREEN_BLOCK):
+            bx, by, bz = x[s:s + _SCREEN_BLOCK], y[s:s + _SCREEN_BLOCK], z[s:s + _SCREEN_BLOCK]
+            r = bx * bx
+            r += by * by
+            r += bz * bz
+            screened = (r > 0.25) & (r < 4.0)
+            np.sqrt(r, out=r)
+            np.divide(bz, r, out=r)
+            keep = ~screened | ((r >= z_lo) & (r <= z_hi))
+            idx = np.flatnonzero(keep) + s
+            result[idx] = self._contains_exact(x[idx], y[idx], z[idx])
+        return result.reshape(shape)
+
+    def _contains_exact(self, x, y, z) -> np.ndarray:
         lat = np.arctan2(z, np.hypot(x, y))
         lng = np.arctan2(y, x)
         lat_ok = (lat >= self.lat.lo) & (lat <= self.lat.hi)

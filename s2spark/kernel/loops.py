@@ -7,8 +7,9 @@ loops (/root/reference/S2Geometry/S2Polygon.cs:10-16).
 The hot kernel is :meth:`Loop.contains_points`: instead of the reference's
 stateful per-edge EdgeCrosser (S2EdgeUtil.cs:740-868) we batch the parity
 computation across (points x loop-edges) with one matrix of orientation
-signs, a masked slow path for edge pairs straddling the great circle, and
-a scalar fallback for shared-vertex degeneracies — semantics identical to
+signs, a dense test of the edges straddling each point's great circle
+(both on bounded blocks of points), and a scalar fallback for
+shared-vertex degeneracies — semantics identical to
 S2Loop.Contains (S2Loop.cs:795-834) with origin parity from the fixed
 point S2.Origin = (0,1,0) (S2.cs:97).
 """
@@ -24,6 +25,16 @@ from .intervals import PI, LatLngRect, R1Interval, RectBounder, S1Interval
 from .cell import Cell
 
 ORIGIN = (0.0, 1.0, 0.0)  # S2.cs:97
+
+# Matrix elements (points x loop vertices) per parity block: each
+# (points, vertices) temporary stays at or under 2 MB.
+PARITY_BLOCK_ELEMENTS = 1 << 18
+
+
+def parity_block(num_vertices: int) -> int:
+    """Points per parity block for a loop of num_vertices."""
+    return max(256, PARITY_BLOCK_ELEMENTS // max(num_vertices, 1))
+
 
 # displacement constant for area fan origin (S2Loop.cs:506-513)
 _E = math.e
@@ -169,26 +180,23 @@ class Loop:
         if not np.any(in_bound):
             return result
         qx, qy, qz = px[in_bound], py[in_bound], pz[in_bound]
-        # chunk the parity kernel: it materializes ~10 (n_points, n_verts)
-        # temporaries, so one monolithic call on a 10^5-point batch against
-        # a many-vertex loop drags a multi-GB working set through memory;
-        # cache-sized chunks (~4M matrix elements) measure 7-17x faster on
-        # the 512-vertex refine fixture with bit-identical output (the
-        # kernel is pure per-point).
-        chunk = max(1024, 4_000_000 // max(len(self.vertices), 1))
-        if len(qx) <= chunk:
-            result[in_bound] = self._parity_inside(qx, qy, qz)
-        else:
-            result[in_bound] = np.concatenate([
-                self._parity_inside(qx[i:i + chunk], qy[i:i + chunk],
-                                    qz[i:i + chunk])
-                for i in range(0, len(qx), chunk)])
+        # The parity kernel materializes ~10 (points, vertices) temporaries,
+        # so it runs on blocks of at most PARITY_BLOCK_ELEMENTS matrix
+        # elements: the working set stays in cache and peak memory stays
+        # flat however many points arrive (the kernel is pure per-point).
+        block = parity_block(len(self.vertices))
+        inside = np.empty(len(qx), dtype=bool)
+        for s in range(0, len(qx), block):
+            inside[s:s + block] = self._parity_inside(
+                qx[s:s + block], qy[s:s + block], qz[s:s + block])
+        result[in_bound] = inside
         return result
 
     def _parity_inside(self, px, py, pz) -> np.ndarray:
         verts = self.vertices  # (m,3)
         m = len(verts)
         k = len(px)
+        unc = sphere.CCW_UNCERTAINTY
         # w[i, j] = RobustCcw(Origin, p_i, v_j) with aCrossB = Origin x p_i
         # Origin x p = (oy*pz - oz*py, oz*px - ox*pz, ox*py - oy*px) with o=(0,1,0)
         oxp = np.empty((k, 3))
@@ -196,10 +204,8 @@ class Loop:
         oxp[:, 1] = 0.0
         oxp[:, 2] = -px
         det = oxp @ verts.T  # (k, m)
-        w = np.zeros((k, m), dtype=np.int8)
-        w[det > sphere.CCW_UNCERTAINTY] = 1
-        w[det < -sphere.CCW_UNCERTAINTY] = -1
-        uncertain = np.abs(det) <= sphere.CCW_UNCERTAINTY
+        w = (det > unc).view(np.int8) - (det < -unc).view(np.int8)
+        uncertain = np.abs(det) <= unc
         if np.any(uncertain):
             rows, cols = np.nonzero(uncertain)
             for r, c in zip(rows, cols):
@@ -207,11 +213,12 @@ class Loop:
                     ORIGIN, (px[r], py[r], pz[r]),
                     (verts[c, 0], verts[c, 1], verts[c, 2]))
 
-        w_prev = np.roll(w, 1, axis=1)  # w_{j-1} with wraparound (chain start v[m-1])
-        # edge j: c = v_{j-1}, d = v_j; acb = -w_prev, bda = w
-        same_side = (w == w_prev) & (w != 0)          # no crossing
-        degenerate = (w == 0) | (w_prev == 0)          # vertex-crossing rule
-        slow = ~same_side & ~degenerate                # opposite sides: full test
+        # edge j: c = v_{j-1}, d = v_j (chain start v[m-1]); acb = -w_{j-1},
+        # bda = w_j.  Same side (product 1): no crossing; a zero: the
+        # vertex-crossing rule; opposite sides (product -1): full test.
+        side = w * np.roll(w, 1, axis=1)
+        degenerate = side == 0
+        slow = side < 0
 
         crossings = np.zeros((k, m), dtype=bool)
         if np.any(slow):
@@ -219,27 +226,21 @@ class Loop:
             c_verts = np.roll(verts, 1, axis=0)
             cd = np.cross(c_verts, verts)  # (m,3)
             dac_det = cd[:, 1]  # dot(cd, Origin)
-            dac = np.zeros(m, dtype=np.int8)
-            dac[dac_det > sphere.CCW_UNCERTAINTY] = 1
-            dac[dac_det < -sphere.CCW_UNCERTAINTY] = -1
-            dac_unc = np.nonzero(np.abs(dac_det) <= sphere.CCW_UNCERTAINTY)[0]
-            for j in dac_unc:
+            dac = (dac_det > unc).view(np.int8) - (dac_det < -unc).view(np.int8)
+            for j in np.nonzero(np.abs(dac_det) <= unc)[0]:
                 dac[j] = sphere._expensive_ccw_scalar(
                     tuple(c_verts[j]), tuple(verts[j]), ORIGIN)
-            rows, cols = np.nonzero(slow)
-            # cbd = -RobustCcw(c, d, p) with cCrossD precomputed
-            cbd_det = -(cd[cols, 0] * px[rows] + cd[cols, 1] * py[rows]
-                        + cd[cols, 2] * pz[rows])
-            cbd = np.zeros(len(rows), dtype=np.int8)
-            cbd[cbd_det > sphere.CCW_UNCERTAINTY] = 1
-            cbd[cbd_det < -sphere.CCW_UNCERTAINTY] = -1
-            unc = np.nonzero(np.abs(cbd_det) <= sphere.CCW_UNCERTAINTY)[0]
-            for t in unc:
-                j, r = cols[t], rows[t]
-                cbd[t] = -sphere._expensive_ccw_scalar(
-                    tuple(c_verts[j]), tuple(verts[j]), (px[r], py[r], pz[r]))
-            acb = -w_prev[rows, cols]
-            crossings[rows, cols] = (cbd == acb) & (dac[cols] == acb)
+            # cbd = -RobustCcw(c, d, p) with cCrossD precomputed, evaluated
+            # densely over the block (cheaper than gathering the slow pairs)
+            cbd_det = -(cd[:, 0] * px[:, None] + cd[:, 1] * py[:, None]
+                        + cd[:, 2] * pz[:, None])
+            cbd = (cbd_det > unc).view(np.int8) - (cbd_det < -unc).view(np.int8)
+            for r, j in zip(*np.nonzero(slow & (cbd == 0))):
+                if abs(cbd_det[r, j]) <= unc:
+                    cbd[r, j] = -sphere._expensive_ccw_scalar(
+                        tuple(c_verts[j]), tuple(verts[j]), (px[r], py[r], pz[r]))
+            # on a slow pair acb = -w_{j-1} = w_j
+            crossings = slow & (cbd == w) & (dac == w)
         if np.any(degenerate):
             rows, cols = np.nonzero(degenerate)
             for r, c in zip(rows, cols):
@@ -431,29 +432,7 @@ class Loop:
         """Batched (may_intersect, contains) for an array of cell ids — one
         vectorized pass instead of per-cell Cell construction (the coverer's
         hot path; same conservative semantics as the scalar predicates)."""
-        from .cell import cells_contain_point, cells_vertices
-        ids = np.asarray(ids, dtype=np.uint64)
-        n = len(ids)
-        cv = cells_vertices(ids)                      # (n,4,3)
-        ce0 = cv.reshape(n * 4, 3)
-        ce1 = cv[:, [1, 2, 3, 0], :].reshape(n * 4, 3)
-        a0, a1 = self._edges()                        # (m,3) each
-        m = len(a0)
-        A0 = np.repeat(a0, n * 4, axis=0)
-        A1 = np.repeat(a1, n * 4, axis=0)
-        B0 = np.tile(ce0, (m, 1))
-        B1 = np.tile(ce1, (m, 1))
-        rc = robust_crossing_batch(
-            A0[:, 0], A0[:, 1], A0[:, 2], A1[:, 0], A1[:, 1], A1[:, 2],
-            B0[:, 0], B0[:, 1], B0[:, 2], B1[:, 0], B1[:, 1], B1[:, 2])
-        crossing_any = (rc.reshape(m, n, 4) >= 0).any(axis=(0, 2))
-        flat = cv.reshape(n * 4, 3)
-        inside = self.contains_points(flat[:, 0], flat[:, 1], flat[:, 2]).reshape(n, 4)
-        v0 = self.vertex(0)
-        v0_in_cell = cells_contain_point(ids, *v0)
-        may = crossing_any | inside.any(axis=1) | v0_in_cell
-        contains = ~crossing_any & inside.all(axis=1) & ~v0_in_cell
-        return may, contains
+        return _relate_cells([self], self.contains_points, ids)
 
     def cap_bound(self):
         from .cap import Cap
@@ -562,6 +541,9 @@ class Polygon:
         return j - 1
 
     def contains_points(self, px, py, pz) -> np.ndarray:
+        if len(self.loops) == 1 and self.bound == self.loops[0].bound:
+            # one shell: its bound is the polygon's, so test it once
+            return self.loops[0].contains_points(px, py, pz)
         px = np.asarray(px, dtype=np.float64)
         result = np.zeros(px.shape, dtype=bool)
         in_bound = self.bound.contains_points(px, py, pz)
@@ -658,31 +640,7 @@ class Polygon:
 
     def relate_cells(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Batched (may_intersect, contains) across all loops."""
-        from .cell import cells_contain_point, cells_vertices
-        ids = np.asarray(ids, dtype=np.uint64)
-        n = len(ids)
-        cv = cells_vertices(ids)
-        flat = cv.reshape(n * 4, 3)
-        inside = self.contains_points(flat[:, 0], flat[:, 1], flat[:, 2]).reshape(n, 4)
-        crossing_any = np.zeros(n, dtype=bool)
-        v0_in_cell = np.zeros(n, dtype=bool)
-        ce0 = cv.reshape(n * 4, 3)
-        ce1 = cv[:, [1, 2, 3, 0], :].reshape(n * 4, 3)
-        for lp in self.loops:
-            a0, a1 = lp._edges()
-            m = len(a0)
-            A0 = np.repeat(a0, n * 4, axis=0)
-            A1 = np.repeat(a1, n * 4, axis=0)
-            B0 = np.tile(ce0, (m, 1))
-            B1 = np.tile(ce1, (m, 1))
-            rc = robust_crossing_batch(
-                A0[:, 0], A0[:, 1], A0[:, 2], A1[:, 0], A1[:, 1], A1[:, 2],
-                B0[:, 0], B0[:, 1], B0[:, 2], B1[:, 0], B1[:, 1], B1[:, 2])
-            crossing_any |= (rc.reshape(m, n, 4) >= 0).any(axis=(0, 2))
-            v0_in_cell |= cells_contain_point(ids, *lp.vertex(0))
-        may = crossing_any | inside.any(axis=1) | v0_in_cell
-        contains = ~crossing_any & inside.all(axis=1) & ~v0_in_cell
-        return may, contains
+        return _relate_cells(self.loops, self.contains_points, ids)
 
     def cap_bound(self):
         from .cap import Cap
@@ -695,3 +653,36 @@ class Polygon:
 
     def rect_bound(self) -> LatLngRect:
         return self.bound
+
+
+def _relate_cells(loops, contains_points, ids) -> tuple[np.ndarray, np.ndarray]:
+    """(may_intersect, contains) of each cell against a region bounded by
+    `loops` with point test `contains_points`: any loop edge crossing a
+    cell edge, a cell corner inside, or a loop's first vertex inside the
+    cell means may-intersect; all corners inside and neither of the others
+    means contains.  Each id is decoded once."""
+    from .cell import cells_uv_bounds, uv_bounds_contain_point, uv_bounds_vertices
+    ids = np.asarray(ids, dtype=np.uint64)
+    n = len(ids)
+    face, uv = cells_uv_bounds(ids)
+    cv = uv_bounds_vertices(face, uv)             # (n,4,3)
+    flat = cv.reshape(n * 4, 3)
+    inside = contains_points(flat[:, 0], flat[:, 1], flat[:, 2]).reshape(n, 4)
+    crossing_any = np.zeros(n, dtype=bool)
+    v0_in_cell = np.zeros(n, dtype=bool)
+    ce1 = cv[:, [1, 2, 3, 0], :].reshape(n * 4, 3)
+    for lp in loops:
+        a0, a1 = lp._edges()
+        m = len(a0)
+        A0 = np.repeat(a0, n * 4, axis=0)
+        A1 = np.repeat(a1, n * 4, axis=0)
+        B0 = np.tile(flat, (m, 1))
+        B1 = np.tile(ce1, (m, 1))
+        rc = robust_crossing_batch(
+            A0[:, 0], A0[:, 1], A0[:, 2], A1[:, 0], A1[:, 1], A1[:, 2],
+            B0[:, 0], B0[:, 1], B0[:, 2], B1[:, 0], B1[:, 1], B1[:, 2])
+        crossing_any |= (rc.reshape(m, n, 4) >= 0).any(axis=(0, 2))
+        v0_in_cell |= uv_bounds_contain_point(face, uv, *lp.vertex(0))
+    may = crossing_any | inside.any(axis=1) | v0_in_cell
+    contains = ~crossing_any & inside.all(axis=1) & ~v0_in_cell
+    return may, contains

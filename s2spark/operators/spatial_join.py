@@ -41,6 +41,7 @@ from ..functions import columns as C
 from ..kernel import cellid as ci
 from ..kernel.coverer import RegionCoverer
 from ..kernel.loops import Loop, Polygon
+from ..plans import covercache
 
 
 def build_coverings(polygons: dict[int, Polygon], max_cells: int = 64,
@@ -108,7 +109,7 @@ _DISK_CACHE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
 
 
 def _key_digest(key) -> str:
-    h = hashlib.sha256()
+    h = hashlib.sha256(covercache.kernel_digest().encode())
     for part in key[0]:
         h.update(part)
     h.update(repr(key[1:]).encode())
@@ -125,15 +126,8 @@ def _load_disk_covering(key):
 
 
 def _store_disk_covering(key, rows) -> None:
-    try:
-        os.makedirs(_DISK_CACHE_DIR, exist_ok=True)
-        path = os.path.join(_DISK_CACHE_DIR, _key_digest(key) + ".json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump([list(r) for r in rows], f)
-        os.replace(tmp, path)
-    except OSError:
-        pass
+    covercache.write_json(os.path.join(_DISK_CACHE_DIR, _key_digest(key) + ".json"),
+                          [list(r) for r in rows])
 
 
 def _make_contains_udf(spark: SparkSession, polygons: dict[int, Polygon]):

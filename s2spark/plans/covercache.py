@@ -10,22 +10,58 @@ compute thunk returning a JSON-serializable list of rows.
 
 The disk tier lives under <repo>/.cache/coverings (gitignored), the same
 location and lifecycle as the polygon covering cache; in production this
-would be shared storage next to the other index artifacts.
+would be shared storage next to the other index artifacts.  Disk keys of
+both caches include kernel_digest(), a hash of the kernel sources that
+decide a covering, so entries written by other kernel code are never read.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
+import tempfile
 
 _MEMO: dict[str, list] = {}
-_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".cache", "coverings")
+_PKG = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_DIR = os.path.join(os.path.dirname(_PKG), ".cache", "coverings")
+_COVERING_SOURCES = ("coverer", "loops", "cell", "cellid", "cellunion", "intervals")
+
+
+@functools.cache
+def kernel_digest() -> str:
+    """Hash of the kernel sources that decide a covering."""
+    h = hashlib.sha256()
+    for name in _COVERING_SOURCES:
+        with open(os.path.join(_PKG, "kernel", name + ".py"), "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:16]
 
 
 def _digest(key) -> str:
-    return hashlib.sha256(repr(key).encode()).hexdigest()[:32]
+    return hashlib.sha256((kernel_digest() + repr(key)).encode()).hexdigest()[:32]
+
+
+def write_json(path: str, rows) -> None:
+    """Write rows as JSON through a temp file private to this writer, in
+    the same directory, then rename it over path: concurrent writers of one
+    key never interleave, and readers see a whole file or none.  Disk
+    errors are ignored (the cache is an optimization)."""
+    try:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    except OSError:
+        return
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(rows, f)
+        os.replace(tmp, path)
+    except OSError:
+        pass
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
 
 
 def cached_rows(key, compute):
@@ -43,13 +79,6 @@ def cached_rows(key, compute):
         rows = None
     if rows is None:
         rows = [list(r) for r in compute()]
-        try:
-            os.makedirs(_DIR, exist_ok=True)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(rows, f)
-            os.replace(tmp, path)
-        except OSError:
-            pass
+        write_json(path, rows)
     _MEMO[dig] = rows
     return rows

@@ -241,3 +241,82 @@ def test_containing_cell_lca(rng):
             if w != SENT:
                 w = brute(w, other)
         assert int(g4[i]) == w, i
+
+
+def _hilbert_walk(face: int, i: int, j: int) -> int:
+    """Leaf id by walking the Hilbert curve one level at a time in Python
+    ints, from the traversal tables alone (no lookup table)."""
+    from s2spark.kernel.hilbert import IJ_TO_POS, POS_TO_ORIENTATION, SWAP_MASK
+    orientation = face & SWAP_MASK
+    pos = 0
+    for bit in range(ci.MAX_LEVEL - 1, -1, -1):
+        p = IJ_TO_POS[orientation][(((i >> bit) & 1) << 1) | ((j >> bit) & 1)]
+        pos = (pos << 2) | p
+        orientation ^= POS_TO_ORIENTATION[p]
+    return (face << 61) | (pos << 1) | 1
+
+
+def _check_against_walk(face, i, j):
+    ids = ci.from_face_ij(np.asarray(face), np.asarray(i), np.asarray(j))
+    want = [_hilbert_walk(int(f), int(a), int(b)) for f, a, b in zip(face, i, j)]
+    assert [int(v) for v in ids] == want
+
+
+def test_from_face_ij_matches_bitwise_walk_random(rng):
+    n = 10_000
+    _check_against_walk(rng.integers(0, 6, n), rng.integers(0, ci.MAX_SIZE, n),
+                        rng.integers(0, ci.MAX_SIZE, n))
+
+
+def test_from_face_ij_matches_bitwise_walk_corners_and_rounds():
+    """Corners, and i/j straddling every 8-bit round boundary (the encode
+    consumes bits 0-7, 8-15, 16-23 and 24-29 in separate gathers)."""
+    top = ci.MAX_SIZE - 1
+    values = {0, top}
+    for b in (8, 16, 24):
+        for v in ((1 << b) - 1, 1 << b, (1 << b) + 1, top ^ (1 << b), top >> (30 - b)):
+            values.add(v)
+    values = sorted(values)
+    face, i, j = zip(*[(f, a, b) for f in range(6) for a in values for b in values])
+    _check_against_walk(face, i, j)
+
+
+# ids from eight rounds of the 4-bit LOOKUP_POS walk, which the 8-bit
+# rounds must reproduce bit for bit
+_EDGE_LATLNG_IDS = [
+    (90.0, 0.0, 0x5000000000000001),
+    (-90.0, 0.0, 0xb000000000000001),
+    (90.0, 180.0, 0x5000000000000001),
+    (-90.0, -180.0, 0xb000000000000001),
+    (0.0, 180.0, 0x6fffffffffffffff),
+    (0.0, -180.0, 0x7000000000000001),
+    (-0.0, -0.0, 0x1000000000000001),
+    (0.0, -0.0, 0x1000000000000001),
+    (-0.0, 0.0, 0x1000000000000001),
+    (45.0, 0.0, 0x12aaaaaaaaaaaaab),
+    (0.0, 45.0, 0x17ffffffffffffff),
+    (-45.0, 0.0, 0x1d55555555555555),
+    (0.0, -135.0, 0x9d55555555555555),
+    (35.264389682754654, 45.0, 0x4000000000000001),
+    (-35.264389682754654, -135.0, 0xa000000000000001),
+    (35.264389682754654, 135.0, 0x5fffffffffffffff),
+    (float("nan"), 0.0, 0x4000000000000001),
+    (0.0, float("nan"), 0x4000000000000001),
+    (91.0, 0.0, 0x5000a75ff55561d5),
+    (-91.0, 10.0, 0xa555ee768edb8b33),
+    (135.0, 20.0, 0x561b0173767eb035),
+    (-200.0, 0.0, 0x7b52cb2ad4b4aacd),
+]
+
+
+def test_from_latlng_deg_edge_cases_pinned():
+    """Poles, the antimeridian, signed zeros, face diagonals and corners,
+    NaN and |lat| > 90: alone, and inside a multi-block batch."""
+    lat = np.array([c[0] for c in _EDGE_LATLNG_IDS])
+    lng = np.array([c[1] for c in _EDGE_LATLNG_IDS])
+    want = np.array([c[2] for c in _EDGE_LATLNG_IDS], dtype=U)
+    with np.errstate(invalid="ignore"):
+        assert np.array_equal(ci.from_latlng_deg(lat, lng), want)
+        reps = ci.ENCODE_BLOCK // len(lat) + 2
+        big = ci.from_latlng_deg(np.tile(lat, reps), np.tile(lng, reps))
+    assert np.array_equal(big, np.tile(want, reps))

@@ -189,3 +189,67 @@ def test_polygon_loop_hierarchy_accessors():
         p = poly.get_parent(k)
         if p >= 0:
             assert poly.loops[p].contains_nested(poly.loops[k])
+
+
+def _ring(lat0, lng0, radius_deg, n, rng=None):
+    """n vertices CCW around (lat0, lng0); radii jittered by +-30% if rng."""
+    t = np.linspace(0.0, 2 * math.pi, n, endpoint=False)
+    r = radius_deg * (1 + (rng.uniform(-0.3, 0.3, n) if rng is not None else 0.0))
+    x, y, z = ci.xyz_from_latlng_deg(lat0 + r * np.sin(t), lng0 + r * np.cos(t))
+    return np.stack([x, y, z], axis=1)
+
+
+def _brute_contains(lp, px, py, pz):
+    """S2Loop.Contains by definition (S2Loop.cs:795-834): the exact bound
+    test, then the parity of EdgeOrVertexCrossing from S2.Origin to p over
+    every edge, all pairs in one robust_crossing_batch call."""
+    from s2spark.kernel.loops import ORIGIN, _vertex_crossing, robust_crossing_batch
+    d = lp.vertices
+    c = np.roll(d, 1, axis=0)
+    k, m = len(px), len(d)
+    P = np.stack([px, py, pz], axis=1).repeat(m, axis=0)
+    C, D = np.tile(c, (k, 1)), np.tile(d, (k, 1))
+    o = np.broadcast_to(np.array(ORIGIN), P.shape)
+    rc = robust_crossing_batch(o[:, 0], o[:, 1], o[:, 2], P[:, 0], P[:, 1], P[:, 2],
+                               C[:, 0], C[:, 1], C[:, 2], D[:, 0], D[:, 1], D[:, 2])
+    cross = rc > 0
+    for t in np.nonzero(rc == 0)[0]:
+        cross[t] = _vertex_crossing(ORIGIN, tuple(map(float, P[t])),
+                                    tuple(map(float, C[t])), tuple(map(float, D[t])))
+    parity = np.logical_xor.reduce(cross.reshape(k, m), axis=1) ^ lp.origin_inside
+    return parity & lp.bound._contains_exact(px, py, pz)
+
+
+@pytest.mark.parametrize("n_verts", [4, 512])
+def test_refine_paths_agree_with_brute_force(n_verts):
+    """One-loop and multi-loop polygon paths and a brute-force test agree
+    on vertices, edge midpoints (the degenerate path) and random points in
+    the loop's bound, with one parity block of points inside the bound and
+    one point either side of it."""
+    from s2spark.kernel.loops import parity_block
+    rng = np.random.default_rng(n_verts)
+    shell = Loop(_ring(10.0, 20.0, 1.0, n_verts, rng if n_verts > 4 else None))
+    far = Loop(_ring(-40.0, -120.0, 1.0, 6))
+    one, two = Polygon([shell]), Polygon([shell, far])
+    v = shell.vertices
+    mid = v + np.roll(v, -1, axis=0)
+    mid /= np.linalg.norm(mid, axis=1, keepdims=True)
+    block = parity_block(n_verts)
+    q = min(n_verts, block // 4)
+    special = np.concatenate([v[:q], mid[:q]])
+    special = special[shell.bound._contains_exact(*special.T)]
+    b = shell.bound
+    for count in (block - 1, block, block + 1):
+        n = count - len(special)
+        lat = rng.uniform(b.lat.lo, b.lat.hi, n)
+        lng = rng.uniform(b.lng.lo, b.lng.hi, n)
+        x, y, z = ci.xyz_from_latlng_deg(np.degrees(lat), np.degrees(lng))
+        px = np.concatenate([special[:, 0], x])
+        py = np.concatenate([special[:, 1], y])
+        pz = np.concatenate([special[:, 2], z])
+        assert b.contains_points(px, py, pz).sum() == count
+        want = _brute_contains(shell, px, py, pz)
+        assert np.array_equal(one.contains_points(px, py, pz), want)
+        assert np.array_equal(two.contains_points(px, py, pz), want)
+        assert np.array_equal(shell.contains_points(px, py, pz), want)
+        assert 0 < want.sum() < count
