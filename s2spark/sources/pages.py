@@ -14,7 +14,8 @@ Coordinate pools (FIXTURES.md §1):
   (c) ~10% a hot city cell (Paris) to exercise salting/skew,
   (d) ~20% no coordinates at all (the miner must drop them).
 
-The miner is `regexp_extract` — JVM-side, no Python.
+The miner is one JVM regex evaluation per page (`regexp_extract_all`
+behind a Generate), no Python.
 """
 
 from __future__ import annotations
@@ -76,16 +77,24 @@ def synthesize_pages(spark: SparkSession, n_rows: int, parts: int | None = None)
 
 
 def mine_coordinates(pages: DataFrame) -> DataFrame:
-    """Extract (lat, lng) from text via JVM regexp; rows without a match are
-    dropped.  `text` is carried through untouched (byte-identity invariant).
+    """Extract (lat, lng) from the first `COORD_REGEX` match in `text`; rows
+    without a match, or whose first match is out of range (|lat| > 90 or
+    |lng| > 180), are dropped.  `text` is carried through untouched
+    (byte-identity invariant).  Usable on a batch or a streaming DataFrame.
 
-    One regex pass per row (regexp_substr), then a cheap split — measured
-    ~2x faster than two regexp_extract group pulls."""
-    m = F.regexp_substr(F.col("text"), F.lit(COORD_REGEX))
+    The regex runs exactly once per page: the first match is taken with
+    `explode(slice(regexp_extract_all(...), 1, 1))`, and the Generate node
+    that explode plans is a barrier Catalyst cannot push the range filter
+    through, so the filter reads the match instead of re-running the regex
+    once per reference (a plain `regexp_substr` column is inlined into
+    every use: 7 regex evaluations per matched page).  lat/lng are the two
+    sides of the match's single ", "."""
+    m = F.explode(F.slice(
+        F.regexp_extract_all(F.col("text"), F.lit(COORD_REGEX), 0), 1, 1))
     return (pages
             .withColumn("__m", m)
-            .where(F.col("__m").isNotNull())
-            .withColumn("lat", F.split(F.col("__m"), ", ").getItem(0).cast("double"))
-            .withColumn("lng", F.split(F.col("__m"), ", ").getItem(1).cast("double"))
+            .withColumns({
+                "lat": F.substring_index("__m", ", ", 1).cast("double"),
+                "lng": F.substring_index("__m", ", ", -1).cast("double")})
             .drop("__m")
             .where((F.abs(F.col("lat")) <= 90) & (F.abs(F.col("lng")) <= 180)))

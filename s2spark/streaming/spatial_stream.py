@@ -5,7 +5,10 @@ stream-compatible plan: a static broadcast covering table joined to the
 probe side, then a stateless pandas-UDF residual filter.  Structured
 Streaming therefore runs the IDENTICAL logical plan per micro-batch —
 nothing is reimplemented here; this module only fixes the entry shape
-(mine -> encode -> join) for a pages stream.
+(mine -> encode -> join) for a pages stream.  The miner is the batch
+`sources.pages.mine_coordinates` itself (its Generate runs per
+micro-batch), so a streamed page is kept or dropped exactly as in batch,
+range filter included.
 
 Scale shape: the stream side never shuffles (broadcast join + stateless
 filter), so per-micro-batch latency is one map pass regardless of the
@@ -16,23 +19,10 @@ stateless enrichment, not an aggregation.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..kernel.loops import Polygon
 from ..operators.spatial_join import points_with_cells, spatial_join
-from ..sources.pages import COORD_REGEX
-
-
-def mine_coordinates_stream(pages_stream: DataFrame) -> DataFrame:
-    """Same single-regex miner as sources.pages.mine_coordinates, usable on
-    a stream (pure Column expressions)."""
-    m = F.regexp_substr(F.col("text"), F.lit(COORD_REGEX))
-    return (pages_stream
-            .withColumn("__m", m)
-            .where(F.col("__m").isNotNull())
-            .withColumn("lat", F.split(F.col("__m"), ", ").getItem(0).cast("double"))
-            .withColumn("lng", F.split(F.col("__m"), ", ").getItem(1).cast("double"))
-            .drop("__m"))
+from ..sources.pages import mine_coordinates
 
 
 def streaming_point_in_polygon(spark: SparkSession, pages_stream: DataFrame,
@@ -40,7 +30,7 @@ def streaming_point_in_polygon(spark: SparkSession, pages_stream: DataFrame,
                                max_cells: int = 64) -> DataFrame:
     """pages stream (url, text, ...) -> (url, lat, lng, polygon_id) rows for
     every page whose mined coordinate falls inside a query polygon."""
-    pts = points_with_cells(mine_coordinates_stream(pages_stream))
+    pts = points_with_cells(mine_coordinates(pages_stream))
     joined = spatial_join(spark, pts, polygons, max_cells=max_cells)
     return joined.select("url", "lat", "lng", "polygon_id")
 
@@ -57,8 +47,7 @@ def streaming_corridor_join(spark: SparkSession, pages_stream: DataFrame,
     plan runs per micro-batch, like the point-in-polygon enrichment above.
     """
     from ..operators.distance_ops import corridor_join
-    from ..operators.spatial_join import points_with_cells
 
-    pts = points_with_cells(mine_coordinates_stream(pages_stream))
+    pts = points_with_cells(mine_coordinates(pages_stream))
     joined = corridor_join(spark, pts, tracks, radius_rad)
     return joined.select("url", "lat", "lng", "track_id", "distance_rad")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import columns as C
-from ..sources.pages import COORD_REGEX, LANGS
+from ..sources.pages import LANGS, mine_coordinates
 
 
 def synthetic_page_stream(spark: SparkSession, rows_per_second: int = 10_000) -> DataFrame:
@@ -47,14 +47,7 @@ def streaming_tile_counts(pages_stream: DataFrame, level: int = 6,
     Stateful aggregation keys on (window, tile): state size is bounded by
     (#active windows x #active tiles); the watermark evicts closed windows.
     """
-    m = F.regexp_substr(F.col("text"), F.lit(COORD_REGEX))
-    geo = (pages_stream
-           .withColumn("__m", m)
-           .where(F.col("__m").isNotNull())
-           .withColumn("lat", F.split(F.col("__m"), ", ").getItem(0).cast("double"))
-           .withColumn("lng", F.split(F.col("__m"), ", ").getItem(1).cast("double"))
-           .drop("__m"))
-    geo = C.with_cell_id(geo, "lat", "lng")
+    geo = C.with_cell_id(mine_coordinates(pages_stream), "lat", "lng")
     return (geo
             .withWatermark("warc_ts", watermark)
             .groupBy(F.window("warc_ts", window).alias("win"),

@@ -43,12 +43,80 @@ def pts(spark):
 def test_column_encode_matches_kernel(spark):
     import pandas as pd
     rng = np.random.default_rng(7)
-    lats = rng.uniform(-90, 90, 5000)
-    lngs = rng.uniform(-180, 180, 5000)
+    # poles, the antimeridian, signed zeros, face edges (|lat| 45 / |lng| 45
+    # + k*90) and the cube's face-diagonal corners (|x| = |y| = |z|)
+    corner = math.degrees(math.atan(1 / math.sqrt(2)))
+    edge = [(90.0, 0.0), (-90.0, 0.0), (90.0, 180.0), (-90.0, -180.0),
+            (0.0, 180.0), (0.0, -180.0), (45.0, 180.0), (-45.0, -180.0),
+            (-0.0, -0.0), (-0.0, 0.0), (0.0, -0.0), (-0.0, 180.0),
+            (45.0, 0.0), (-45.0, 90.0), (0.0, 45.0), (0.0, -135.0)]
+    edge += [(sa * corner, lng) for sa in (1, -1)
+             for lng in (45.0, 135.0, -45.0, -135.0)]
+    lats = np.concatenate([rng.uniform(-90, 90, 5000), [a for a, _ in edge]])
+    lngs = np.concatenate([rng.uniform(-180, 180, 5000), [b for _, b in edge]])
     df = spark.createDataFrame(pd.DataFrame({"lat": lats, "lng": lngs}))
-    got = C.with_cell_id(df, "lat", "lng").select("lat", "lng", "cell_id").toPandas()
+    encoded = C.with_cell_id(df, "lat", "lng")
+    # nested subqueries, no CTE definitions for stacked transformations to
+    # re-analyze
+    analyzed = encoded._jdf.queryExecution().analyzed().toString()
+    assert "WithCTE" not in analyzed and "CTERelationDef" not in analyzed
+    got = encoded.select("lat", "lng", "cell_id").toPandas()
+    assert np.array_equal(np.signbit(got["lat"]), np.signbit(lats))
     expect = ci.to_signed(ci.from_latlng_deg(got["lat"].to_numpy(), got["lng"].to_numpy()))
     assert np.array_equal(got["cell_id"].to_numpy(), expect)
+
+
+def test_mine_coordinates_matches_re_oracle(spark, tmp_path):
+    """The miner == Python `re`: the first COORD_REGEX match, then the range
+    filter (a first pair out of range drops the row even when a valid pair
+    follows), columns in order and text carried through; and the executed
+    plan evaluates the regex once per page."""
+    import re
+
+    from s2spark.sources.pages import COORD_REGEX
+    texts = [
+        None,
+        "",
+        "no coordinates here",
+        "48.8566, 2.3522 at the start",
+        "at the end -33.8688, 151.2093",
+        "-0.0000, -0.0000 signed zeros",
+        "page 0.0000, -0.0000 and -0.0000, 0.0000",
+        "91.0000, 10.0000 first out of range then 45.0000, 10.0000",
+        "10.0000, -180.0001 first out of range then 1.0000, 1.0000",
+        "180.0000, 180.0000 wraps to the origin if unfiltered",
+        "90.0000, 180.0000 and -90.0000, -180.0000 bounds",
+        "-90.0000, -180.0000",
+        "12.34567, 45.6789 five decimals first",
+        "12.3456, 45.67891 five decimals second",
+        "1.234, 5.6789 three decimals; 1.2345,5.6789 no space",
+        "1.2345 , 5.6789 space before the comma",
+        "x1.23456, 7.8901 then 3.0000, 4.0000",
+        "--1.0000, --2.0000 double minus",
+        "123.4567, 12.0000",
+        "7.0000, 8.0000",
+    ]
+    rows = [(f"u{i}", t) for i, t in enumerate(texts)]
+    path = str(tmp_path / "miner_pages")
+    spark.createDataFrame(rows, "url string, text string").write.parquet(path)
+    mined = mine_coordinates(spark.read.parquet(path))
+
+    assert mined.columns == ["url", "text", "lat", "lng"]
+    got = {r["url"]: (r["text"], r["lat"], r["lng"]) for r in mined.collect()}
+    expect = {}
+    for url, t in rows:
+        m = re.search(COORD_REGEX, t, re.ASCII) if t is not None else None
+        if m is None:
+            continue
+        lat, lng = float(m.group(1)), float(m.group(2))
+        if abs(lat) <= 90 and abs(lng) <= 180:
+            expect[url] = (t, lat, lng)
+    assert got == expect and len(expect) >= 8
+    for url, (_, lat, lng) in expect.items():   # == ignores the sign of zero
+        assert list(np.signbit(got[url][1:])) == list(np.signbit([lat, lng])), url
+
+    plan = mined._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("regexp_extract") == 1, plan
 
 
 def test_spatial_join_matches_bruteforce(spark, polygons, pts):

@@ -23,7 +23,12 @@ def test_streaming_pip_matches_batch(spark, tmp_path):
 
     polygons = {1: make_polygon("-4:-4, -4:4, 4:4, 4:-4;"),
                 2: make_polygon("48.5:2.0, 48.5:2.7, 49.2:2.7, 49.2:2.0;")}
-    pages = synthesize_pages(spark, 5000).select("url", "text")
+    # first match out of range: the batch miner drops this page; a miner
+    # without the range filter would wrap it to (0, 0), inside polygon 1
+    bad = spark.createDataFrame(
+        [("https://bad.example/wrap", "at 180.0000, 180.0000 and 0.0000, 0.0000")],
+        "url string, text string")
+    pages = synthesize_pages(spark, 5000).select("url", "text").unionByName(bad)
     src_dir = str(tmp_path / "pages_src")
     pages.coalesce(2).write.mode("overwrite").parquet(src_dir)
 
